@@ -52,7 +52,7 @@ def _conv_index(conv_id: pd.Series) -> np.ndarray:
     return conv_id.str.slice(5).astype(np.int64).to_numpy()
 
 
-def transcripts_inputs(spark, work: str, seed: int, size: str) -> dict:
+def transcripts_inputs(spark, data: str, seed: int, size: str) -> dict:
     """The transcripts table and the numbered stream batches.
 
     One table of ``base + batches × batch`` conversations is generated
@@ -65,7 +65,7 @@ def transcripts_inputs(spark, work: str, seed: int, size: str) -> dict:
     to batch, as a live stream's would.
     """
     sz = SIZES[size]
-    out = os.path.join(work, "data", f"transcripts-s{seed}-{size}")
+    out = os.path.join(data, f"transcripts-s{seed}-{size}")
     paths = {
         "base": os.path.join(out, "base"),
         "batches": [
@@ -107,12 +107,12 @@ def transcripts_inputs(spark, work: str, seed: int, size: str) -> dict:
     return paths
 
 
-def copurchase_lineitem(work: str, seed: int, size: str) -> str:
+def copurchase_lineitem(data: str, seed: int, size: str) -> str:
     """A TPC-H-shaped ``lineitem`` (``l_orderkey``, ``l_partkey``):
     orders of 1-7 lines, parts drawn uniformly. Returns the directory
     ``copurchase_graph`` reads ``lineitem.parquet`` from."""
     sz = SIZES[size]
-    out = os.path.join(work, "data", f"copurchase-s{seed}-{size}")
+    out = os.path.join(data, f"copurchase-s{seed}-{size}")
     if not _fresh(out):
         shutil.rmtree(out, ignore_errors=True)
         os.makedirs(out)

@@ -1,7 +1,7 @@
 """Benchmark entry point: one workload, one run, one JSON result line.
 
     python3 perfbench/run.py --workload transcripts-pipeline --seed 1 \\
-        --seconds 14 --trace 0
+        --seconds 10 --trace 0
 
 Run from the repository root. The run starts a local Spark session on
 every core this process may use, generates (or reuses) the seeded
@@ -19,6 +19,7 @@ its unit and sample count. Everything the run writes stays under
 from __future__ import annotations
 
 import argparse
+import gc
 import glob
 import json
 import os
@@ -187,6 +188,27 @@ def stop_session(spark) -> None:
             pass
 
 
+def persistent_rdds(spark) -> dict:
+    """RDD id → JavaRDD of everything the context holds persisted."""
+    return dict(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def reset_between_reps(spark, keep: set) -> None:
+    """Return the engine to the state set-up left it in (untimed).
+
+    Operators cut lineage with ``localCheckpoint``, whose blocks stay in
+    the block manager until the driver JVM collects the RDD; left alone
+    they pile up over repetitions, fill the memory store and slow every
+    later repetition. Unpersist what a repetition persisted, then let
+    both garbage collectors run so Spark's context cleaner drops the
+    repetition's shuffles and broadcasts too."""
+    for rid, rdd in persistent_rdds(spark).items():
+        if rid not in keep:
+            rdd.unpersist(True)
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
 def _state(pid: int) -> str:
     try:
         with open(f"/proc/{pid}/stat") as f:
@@ -276,6 +298,8 @@ def run(args, run_dir, sampler, session) -> int:
         workload.load(ctx)
         load_s.append(time.perf_counter() - t0)
 
+    keep = set(persistent_rdds(spark))
+
     def one_rep(idx: int) -> tuple[float, dict]:
         scratch = os.path.join(run_dir, "reps", str(idx))
         os.makedirs(scratch)
@@ -287,12 +311,19 @@ def run(args, run_dir, sampler, session) -> int:
         finally:
             tempfile.tempdir = os.environ["TMPDIR"]
 
+    def untimed_rep(idx: int) -> float:
+        dt, out = one_rep(idx)
+        workload.verify(ctx, out)
+        workload.release(out)
+        del out
+        shutil.rmtree(os.path.join(run_dir, "reps", str(idx)), ignore_errors=True)
+        reset_between_reps(spark, keep)
+        return dt
+
     # warm-up: untimed for job_s, part of setup_s; also builds the reference
-    warm_s, out = one_rep(-1)
-    workload.verify(ctx, out)
-    workload.release(out)
-    shutil.rmtree(os.path.join(run_dir, "reps", "-1"), ignore_errors=True)
+    warm_s = untimed_rep(-1)
     setup_s = session_s + median(load_s) + warm_s
+    settle_s = [untimed_rep(-2 - i) for i in range(workload.settle_reps)]
 
     attempted = failed = 0
     job_s: list[float] = []       # untraced repetitions
@@ -337,7 +368,9 @@ def run(args, run_dir, sampler, session) -> int:
                         if k in out
                     }
             workload.release(out)
+            out = None
         shutil.rmtree(os.path.join(run_dir, "reps", str(idx)), ignore_errors=True)
+        reset_between_reps(spark, keep)
         idx += 1
         # at least one verified repetition of each kind, unless they fail
         enough = bool(job_s) and (traced_s or not args.trace)
@@ -354,7 +387,8 @@ def run(args, run_dir, sampler, session) -> int:
     lines = [
         metric_line("setup_s", [setup_s], "s"),
         f"SETUP session_s={session_s:.4f} load_s={median(load_s):.4f} "
-        f"load_passes={len(load_s)} warmup_s={warm_s:.4f}",
+        f"load_passes={len(load_s)} warmup_s={warm_s:.4f} "
+        f"settle_s={','.join(f'{x:.3f}' for x in settle_s) or '-'}",
         metric_line("job_s", job_s, "s"),
         metric_line("peak_rss_mb", [sampler.peak / 2**20], "MB"),
         f"METRIC error_rate value={failed / max(attempted, 1):.6g} unit=ratio "

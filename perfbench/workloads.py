@@ -104,6 +104,10 @@ class Ctx:
 class Workload:
     name = ""
     load_passes = 1  # set-up passes whose median counts toward setup_s
+    # untimed repetitions after the warm-up, counted in neither set-up nor
+    # job_s, for workloads whose repetitions keep speeding up while the
+    # JVM compiles their hot paths
+    settle_reps = 0
 
     def prepare(self, ctx: Ctx) -> None:
         """Generate inputs and expectations (untimed)."""
@@ -309,6 +313,9 @@ class TranscriptsPipeline(Workload):
 class CopurchaseAnalytics(Workload):
     name = "copurchase-analytics"
     load_passes = 3
+    # measured: the four repetitions after the warm-up took 7.6, 6.5, 5.8
+    # and 5.4 s, the ones after them 4.8-5.3 s
+    settle_reps = 2
 
     def __init__(self):
         self.ref = None
