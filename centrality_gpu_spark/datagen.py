@@ -31,6 +31,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from centrality_gpu_spark.sources.reference_samples import SAMPLE_EDGES
+
 BASE_EPOCH = int(datetime(2026, 1, 1, tzinfo=timezone.utc).timestamp())
 ROLES = ("user", "assistant", "tool")
 _FILLER = (
@@ -43,14 +45,7 @@ TRANSCRIPT_SCHEMA = (
     "ts timestamp"
 )
 
-SAMPLE_DIR = "/root/reference/Codes/sample_input"
 SAMPLE_NAMES = ("test1", "test2", "test3", "test4")
-
-
-def _read_sample(name: str) -> list[tuple[int, int]]:
-    with open(f"{SAMPLE_DIR}/{name}.txt") as f:
-        lines = f.read().strip().splitlines()
-    return [(int(u), int(v)) for u, v, _w in (ln.split() for ln in lines[1:])]
 
 
 def _conv_batch(seed: int, conv_indices, n_tools: int,
@@ -123,7 +118,7 @@ def _sample_rows() -> list[tuple]:
     """Conversations embedding the four reference sample graphs."""
     rows = []
     for gi, name in enumerate(SAMPLE_NAMES):
-        edges = _read_sample(name)
+        edges = SAMPLE_EDGES[gi + 1]
         # per sample vertex: one conversation listing its incident edge-tools
         incident: dict[int, list[str]] = {}
         for u, v in edges:

@@ -143,6 +143,7 @@ def brandes_edge_kernel(
     indices: np.ndarray,
     sources: np.ndarray,
     n: int,
+    comp: np.ndarray | None = None,
 ) -> np.ndarray:
     """Edge betweenness for a batch of sources → partial per-CSR-slot
     accumulator (ordered-pair counting like the vertex kernel: the sum
@@ -153,6 +154,8 @@ def brandes_edge_kernel(
     folding it into δ_v — the per-edge view of A3/G15
     (``kernels_free.cu:377-426`` accumulates the identical product, it
     just adds it to the vertex cell instead of the edge slot).
+    ``comp`` (component labels) as in ``brandes_kernel``: computed here
+    when None, precomputed on the driver by callers that fan out.
     """
     from centrality_gpu_spark.operators.csrkernels import (
         _flat_neighbors_eidx,
@@ -160,7 +163,8 @@ def brandes_edge_kernel(
     )
 
     ebc = np.zeros(len(indices))
-    comp = csr_components(indptr, indices, n)
+    if comp is None:
+        comp = csr_components(indptr, indices, n)
     for s in sources:
         dist, sigma, levels = bfs_forward(
             indptr, indices, int(s), n, comp=comp
@@ -196,7 +200,13 @@ def edge_betweenness(
     ids, indptr, indices = graph_to_csr(graph)
     n = len(ids)
     src_of_slot = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
-    bcast = spark.sparkContext.broadcast((ids, indptr, indices, src_of_slot))
+    # component labels computed ONCE here rather than per task batch
+    from centrality_gpu_spark.operators.csrkernels import csr_components
+
+    comp = csr_components(indptr, indices, n)
+    bcast = spark.sparkContext.broadcast(
+        (ids, indptr, indices, src_of_slot, comp)
+    )
     if sources is None:
         dense_sources = list(range(n))
     else:
@@ -216,12 +226,12 @@ def edge_betweenness(
     ).repartition(num_tasks)
 
     def run_batch(batches):
-        ids_, indptr_, indices_, srcslot_ = bcast.value
+        ids_, indptr_, indices_, srcslot_, comp_ = bcast.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ebc = brandes_edge_kernel(
-                indptr_, indices_, pdf["sid"].to_numpy(), len(ids_)
+                indptr_, indices_, pdf["sid"].to_numpy(), len(ids_), comp=comp_
             )
             nz = np.nonzero(ebc)[0]
             u = ids_[srcslot_[nz]]

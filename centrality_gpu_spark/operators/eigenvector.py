@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from centrality_gpu_spark.graph import Graph
-from centrality_gpu_spark.operators.superstep import BlockedEdges, block_edges, spmv, spmv_sql
+from centrality_gpu_spark.operators.superstep import (
+    BlockedEdges,
+    _dense_ready,
+    block_edges,
+    spmv,
+    spmv_sql,
+)
 from centrality_gpu_spark.plans.checkpoint import CheckpointManager
 
 
@@ -54,9 +60,7 @@ def eigenvector_centrality(
 
     own_blocked = False
     if mode == "csr" and blocked is None:
-        from centrality_gpu_spark.operators.superstep import default_block_store
-
-        blocked = default_block_store(graph)
+        blocked = block_edges(graph)
         own_blocked = True
 
     x = ckpt.truncate(verts.select("id", F.lit(1.0 / math.sqrt(n)).alias("score")))
@@ -169,21 +173,6 @@ def eigenvector_oracle_sql(
 
 # ---------------------------------------------------------------- Katz
 
-def _dense_ready(mode: str, blocked) -> bool:
-    """True when the driver-resident dense power loop applies: a
-    dst-partitioned disk store within the broadcast guard (the same
-    dispatch ``pagerank`` uses for its dense loop)."""
-    from centrality_gpu_spark.operators.superstep import _dense_map
-
-    return (
-        mode == "csr"
-        and blocked is not None
-        and blocked.path is not None
-        and blocked.partition_by.startswith("dst")
-        and _dense_map(blocked) is not None
-    )
-
-
 def _eigen_dense_loop(x, blocked, n_iter, fixed_iterations, tol, ckpt, weighted):
     """Power iteration with the vector driver-resident: ONE map-only
     Spark job per iteration (``spmv_dense``); norm and delta are O(V)
@@ -282,9 +271,7 @@ def katz_centrality(
 
     own_blocked = False
     if mode == "csr" and blocked is None:
-        from centrality_gpu_spark.operators.superstep import default_block_store
-
-        blocked = default_block_store(graph)
+        blocked = block_edges(graph)
         own_blocked = True
 
     x = ckpt.truncate(verts.select("id", F.lit(float(beta)).alias("katz")))

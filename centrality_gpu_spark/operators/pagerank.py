@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from centrality_gpu_spark.graph import Graph
-from centrality_gpu_spark.operators.superstep import BlockedEdges, block_edges, spmv, spmv_sql
+from centrality_gpu_spark.operators.superstep import (
+    BlockedEdges,
+    _dense_ready,
+    block_edges,
+    spmv,
+    spmv_sql,
+)
 from centrality_gpu_spark.plans.checkpoint import CheckpointManager
 
 
@@ -68,9 +74,7 @@ def pagerank(
 
     own_blocked = False
     if mode == "csr" and blocked is None:
-        from centrality_gpu_spark.operators.superstep import default_block_store
-
-        blocked = default_block_store(graph)
+        blocked = block_edges(graph)
         own_blocked = True
 
     name = "pagerank"
@@ -121,19 +125,11 @@ def _pagerank_loop(graph, ranks, verts, start_iter, n_iter, base, alpha, mode,
                    blocked, fixed_iterations, tol, ckpt, name, weighted=False):
     import time
 
-    if (
-        mode == "csr"
-        and blocked is not None
-        and blocked.path is not None
-        and blocked.partition_by.startswith("dst")
-    ):
-        from centrality_gpu_spark.operators.superstep import _dense_map
-
-        if _dense_map(blocked) is not None:
-            return _pagerank_dense_loop(
-                ranks, start_iter, n_iter, base, alpha, blocked,
-                fixed_iterations, tol, ckpt, name, weighted,
-            )
+    if _dense_ready(mode, blocked):
+        return _pagerank_dense_loop(
+            ranks, start_iter, n_iter, base, alpha, blocked,
+            fixed_iterations, tol, ckpt, name, weighted,
+        )
 
     for it in range(start_iter, n_iter):
         t0 = time.time()
@@ -411,9 +407,7 @@ def personalized_pagerank(
 
     own_blocked = False
     if mode == "csr" and blocked is None:
-        from centrality_gpu_spark.operators.superstep import default_block_store
-
-        blocked = default_block_store(graph)
+        blocked = block_edges(graph)
         own_blocked = True
 
     import contextlib

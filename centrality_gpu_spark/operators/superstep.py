@@ -1,4 +1,4 @@
-"""The SpMV superstep primitive: partition-local CSR gather-scatter.
+"""The SpMV superstep primitive: one on-disk CSR block store, one kernel.
 
 This is the engine's physical core (SURVEY.md §2.10 G13, §7 step 2) —
 the Spark re-expression of the reference's CSR kernels: counting-sort
@@ -8,69 +8,98 @@ CSR build (``graph_ear_decompos.h:36-101``), edge-parallel gather
 
 Physical design, and why it scales:
 
-- Edges are hash-partitioned ONCE into ``n_blocks`` buckets by ``src``
-  and cached (``block_edges``). ``n_blocks`` equals
-  ``spark.sql.shuffle.partitions`` so the cogroup below reuses the
-  cached partitioning (exchange elimination) instead of reshuffling
-  the edge table every superstep — the per-iteration shuffle volume is
-  O(V) (the value vector + partial sums), never O(E).
-- Each superstep cogroups the edge blocks with the co-partitioned
-  value vector and runs a vectorized numpy kernel per block
-  (``applyInPandas`` over cogrouped data — Arrow batches, no per-row
-  Python): gather ``val[src]``, multiply per-edge, partial-aggregate
-  by ``dst`` with ``np.bincount``. The partial aggregate is the
-  map-side combine — the analog of the reference's intra-block atomics
-  before the cross-block atomicAdd — so the final shuffle carries at
-  most |distinct dst per block| rows.
-- **Hub skew (power-law)**: a vertex with degree ≫ average would put
-  all its edges in one bucket. Vertices above ``hub_threshold`` get
-  their edges *salted* across buckets by ``hash(src,dst)`` and their
-  value rows replicated to every bucket (hubs are few by definition,
-  so replication is ≤ |hubs|·n_blocks rows ≈ broadcast-sized). This is
-  explicit salting on top of AQE skew-join handling.
+- **One block store.** ``block_edges`` buckets the edge table ONCE into
+  ``n_blocks`` blocks and writes each block as coded ``.npy`` arrays
+  (the v3 layout, ``_write_coded_blocks``): edges sorted by (dst, src),
+  dense per-block src codes, a dst segment index and per-unique-src
+  degree factors. Python workers ``np.load(mmap_mode='r')`` a block on
+  first touch and keep it in a process-local LRU keyed by the store's
+  build id (``_load_csr_block``), so supersteps never move the edges —
+  the analog of the reference keeping CSR resident on the GPU across
+  sources (``kernels_free.cu:43-79``).
+- **One kernel.** Every superstep runs ``_block_spmv`` per block: look
+  up the block's source values, fold in the degree factor, gather by
+  ``src_inv``, multiply by ``w`` and segment-sum with
+  ``np.add.reduceat`` over ``dst_indptr`` (the sort makes the
+  scatter-add sequential).
+- **Two bucketings, chosen by vertex count.** ``dst`` (V ≤
+  ``BROADCAST_VALUES_MAX_VERTICES``, the default whenever it fits):
+  blocks own disjoint dst sets, the O(V) value vector is broadcast and
+  a superstep is one map-only job with no combine shuffle (``spmv`` on
+  DataFrames, ``spmv_dense`` on driver vectors). ``src`` (above the
+  guard): values are routed to their source's block and the per-block
+  partial sums meet in a sparse (id, partial) combine, so no V-sized
+  structure exists anywhere.
+- **Hub skew (power-law)** is salted only in the ``src`` store, where a
+  high-degree source would put all its edges in one block: sources
+  above ``hub_threshold`` get their edges spread across blocks by
+  ``hash(src, dst)`` and their value rows replicated to every block
+  (hubs are few, so replication is ≤ |hubs|·n_blocks rows). A ``dst``
+  store needs no salting — the value side is broadcast, and a
+  high-in-degree vertex only fattens its own block, bounding task skew
+  by max in-degree like the reference's per-dst atomicAdd contention.
 """
 
 from __future__ import annotations
 
 import collections
+import json
 import os
+import shutil
+import tempfile
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from centrality_gpu_spark.graph import Graph
 
+# Vertex-count guard for the dst store: its supersteps broadcast the
+# O(V) value vector and the sorted global id map (~16 B/vertex, ~1 GB
+# at the guard) to every executor. Above it block_edges picks the
+# routed src store.
+BROADCAST_VALUES_MAX_VERTICES = 64_000_000
+
+STORE_VERSION = 3
+_MANIFEST = "_MANIFEST.json"
+# block array name -> .npy file of the v3 layout
+_BLOCK_FILES = {
+    "src_u": "src_ids",            # sorted unique srcs
+    "src_inv": "src_code",         # per edge: code of its src in src_u
+    "dst_u": "dst_ids",            # sorted unique dsts
+    "dst_indptr": "dst_indptr",    # dst_u[i]'s edges: [indptr[i], indptr[i+1])
+    "w": "w",
+    "src_inv_deg": "src_inv_deg",  # per unique src: 1 / degree
+    "src_inv_wdeg": "src_inv_wdeg",  # per unique src: 1 / Σ weight
+}
+
 
 @dataclass
 class BlockedEdges:
-    """Edges hash-bucketed by src (salted for hubs), cached.
+    """Handle to an on-disk block store built by ``block_edges``.
 
-    ``edges`` has columns (block:int, src, dst, weight, src_degree).
-    ``hubs`` is a small DF (id) of salted high-degree vertices.
-    ``path`` (optional): directory holding the same edges written as
-    ``block=N/`` parquet — enables the worker-cached CSR fast path
-    (supersteps ship only the value vector, never the edges).
-    ``dense`` caches the lazily-built global dense-combine map
-    (see ``_dense_map``): None = not built yet, False = over the size
-    guard (sparse combine), else (ids ndarray, broadcast).
+    ``hubs`` is a small persisted DF (id) of the salted high-degree
+    sources of a ``src`` store (None on a ``dst`` store, which is never
+    salted). ``build_id`` names this build of the store: worker caches
+    are keyed by it, so a rebuild at the same path never serves the old
+    blocks. ``dense`` caches the lazily-built sorted global id map
+    (``_dense_map``): None = not built yet, False = none (src store, or
+    over the size guard), else (ids ndarray, broadcast).
     """
 
-    edges: DataFrame | None
-    hubs: DataFrame
+    spark: SparkSession
+    path: str
     n_blocks: int
-    path: str | None = None
+    partition_by: str
+    build_id: str
+    hubs: DataFrame | None = None
     n_hubs: int = 0
     dense: object = None
-    partition_by: str = "src"
     _hub_ids: object = None  # lazily collected small hub-id list
-
-    @property
-    def spark(self):
-        return self.hubs.sparkSession
 
     def hub_id_list(self) -> list[int]:
         """Hub ids as a driver list (cached). Only called on the small-
@@ -80,9 +109,8 @@ class BlockedEdges:
         return self._hub_ids
 
     def unpersist(self) -> None:
-        if self.edges is not None:
-            self.edges.unpersist()
-        self.hubs.unpersist()
+        if self.hubs is not None:
+            self.hubs.unpersist()
 
 
 def block_edges(
@@ -91,40 +119,35 @@ def block_edges(
     hub_threshold: int | None = None,
     scratch_dir: str | None = None,
     reuse_existing: bool = False,
-    partition_by: str = "src",
+    partition_by: str | None = None,
 ) -> BlockedEdges:
-    """Bucket + cache the edge table for repeated supersteps.
+    """Bucket the edge table once into an on-disk block store.
 
-    ``scratch_dir``: if given, the buckets are materialized ONCE as a
-    coded ``.npy`` block store (``_write_coded_blocks``); supersteps
-    then run on the disk store (mmap'd, OS-page-cache-shared across
-    workers) and never touch a JVM copy of the edges — the DataFrame
-    analog of the reference keeping CSR resident on the GPU across
-    sources (``kernels_free.cu:43-79``). On a cluster the dir must be
-    shared storage (HDFS/S3/NFS) or per-node scratch.
+    The buckets are written as the v3 coded ``.npy`` store
+    (``_write_coded_blocks``) under ``{scratch_dir}/edges_blocked``;
+    supersteps read the blocks mmap'd and OS-page-cache-shared across
+    workers and never touch a JVM copy of the edges. ``scratch_dir``
+    defaults to a fresh temp dir; on a cluster it must be shared
+    storage (HDFS/S3/NFS) or per-node scratch.
 
-    ``reuse_existing``: skip the (expensive) store write when a
-    manifest already exists at the path — valid only when the graph
-    and ``n_blocks`` are unchanged (the caller's responsibility; use a
-    content-derived path).
+    ``partition_by``: ``"dst"`` buckets by destination, so per-block
+    output dst sets are DISJOINT and a superstep broadcasts the value
+    vector and needs no combine shuffle — the dense-iteration regime
+    (PageRank/Katz/eigenvector, every vertex active). ``"src"`` buckets
+    by source: values are routed to their block, per-block partials
+    overlap on dst and meet in a sparse combine, and sources above
+    ``hub_threshold`` are salted across blocks. ``None`` (default)
+    picks ``"dst"`` when the vertex count fits
+    ``BROADCAST_VALUES_MAX_VERTICES``, else ``"src"``.
 
-    ``n_blocks`` is independent of core count: more blocks than cores
-    just means finer tasks, and a store built once can serve runs at
-    any parallelism.
+    ``reuse_existing``: skip the (expensive) store write when the path
+    already holds a current store with the same bucketing, block count
+    and hub threshold — valid only when the graph is unchanged (the
+    caller's responsibility; use a content-derived path).
 
-    ``partition_by``: ``"src"`` (default) buckets by source — values
-    route to their single bucket and per-block partials overlap on dst
-    (cross-block combine required). ``"dst"`` buckets by destination —
-    per-block output dst sets are DISJOINT, so a broadcast-value
-    superstep (``spmv`` detects the store kind) emits its result with
-    NO combine shuffle at all; this is the dense-iteration regime
-    (PageRank/Katz/eigenvector, every vertex active) for graphs whose
-    O(V) value vector fits a broadcast, mirroring the reference's
-    value-vector-in-device-memory design (``kernels_free.cu:43-79``).
-    No salting in dst mode: a high-in-degree vertex only fattens its
-    one block (the kernel is vectorized; skew shows as task-time
-    variance, bounded by max in-degree), exactly like the reference's
-    per-dst atomicAdd contention.
+    ``n_blocks`` (default: ``spark.sql.shuffle.partitions``) is
+    independent of core count: more blocks than cores just means finer
+    tasks, and a store built once can serve runs at any parallelism.
     """
     spark = graph.spark
     if n_blocks is None:
@@ -132,119 +155,83 @@ def block_edges(
     if hub_threshold is None:
         # a vertex is a hub if its edges alone would fill ~1/4 of a block
         hub_threshold = 10_000
-    if partition_by not in ("src", "dst", "dst_range"):
-        raise ValueError(
-            f"partition_by must be 'src', 'dst', or 'dst_range', got {partition_by!r}"
+    if partition_by is None:
+        partition_by = (
+            "dst"
+            if graph.num_vertices() <= BROADCAST_VALUES_MAX_VERTICES
+            else "src"
         )
-
-    hubs = (
-        graph.degrees()
-        .where(F.col("degree") > hub_threshold)
-        .select("id")
-        .persist()
-    )
-    n_hubs = hubs.count()
+    if partition_by not in ("src", "dst"):
+        raise ValueError(f"partition_by must be 'src' or 'dst', got {partition_by!r}")
+    if scratch_dir is None:
+        scratch_dir = tempfile.mkdtemp(prefix="cgs_blk_")
+    path = os.path.join(scratch_dir, "edges_blocked")
 
     deg = graph.edges.groupBy("src").agg(
         F.count("*").alias("src_degree"),
         F.sum("weight").alias("src_wdeg"),
     )
-    e = graph.edges.join(deg, "src")
-    if partition_by == "dst_range":
-        # locality-preserving variant of the dst store: blocks hold
-        # CONTIGUOUS dst-id ranges, balanced by EDGE count (quantiles of
-        # the edge table's dst column). When vertex ids carry locality
-        # (crawl order, dense relabeling, per-shard offsets) a block's
-        # src set concentrates in the same id range, so the per-block
-        # gather from the broadcast value vector hits a narrow, cache-
-        # resident slice instead of random DRAM — the Gemini/GraphX-
-        # EdgePartition1D chunking idea. Semantics identical to 'dst'.
-        qs = [i / n_blocks for i in range(1, n_blocks)]
-        bounds = sorted(set(graph.edges.stat.approxQuantile("dst", qs, 0.001)))
-        block = sum(
-            (F.col("dst") >= F.lit(float(b))).cast("int") for b in bounds
-        ).cast("int") if bounds else F.lit(0)
-        n_hubs_eff = 0  # no salting; value side is broadcast, not routed
-    elif partition_by == "dst":
-        block = F.pmod(F.xxhash64("dst"), F.lit(n_blocks)).cast("int")
-        n_hubs_eff = 0  # no salting; value side is broadcast, not routed
+    hubs, n_hubs = None, 0
+    if partition_by == "dst":
+        block = F.pmod(F.xxhash64("dst"), F.lit(n_blocks))
+        layout = {"partition_by": "dst", "n_blocks": n_blocks}
     else:
-        is_hub = F.col("src_degree") > hub_threshold
+        hubs = (
+            deg.where(F.col("src_degree") > hub_threshold)
+            .select(F.col("src").alias("id"))
+            .persist()
+        )
+        n_hubs = hubs.count()
         block = F.when(
-            is_hub, F.pmod(F.xxhash64("src", "dst"), F.lit(n_blocks))
-        ).otherwise(F.pmod(F.xxhash64("src"), F.lit(n_blocks))).cast("int")
-        n_hubs_eff = n_hubs
-    blocked_plan = e.select(
-        block.alias("block"), "src", "dst", "weight", "src_degree", "src_wdeg"
-    ).repartition(n_blocks, "block")
+            F.col("src_degree") > hub_threshold,
+            F.pmod(F.xxhash64("src", "dst"), F.lit(n_blocks)),
+        ).otherwise(F.pmod(F.xxhash64("src"), F.lit(n_blocks)))
+        layout = {"partition_by": "src", "n_blocks": n_blocks,
+                  "hub_threshold": hub_threshold}
 
-    if scratch_dir is not None:
-        path = os.path.join(scratch_dir, "edges_blocked")
-        if not (
-            reuse_existing
-            and _store_version(path) >= 3
-            and _store_partition_by(path) == partition_by
-        ):
-            _write_coded_blocks(blocked_plan, path, partition_by)
-        return BlockedEdges(
-            None, hubs, n_blocks, path, n_hubs_eff, partition_by=partition_by
+    manifest = _read_manifest(path) if reuse_existing else None
+    if manifest is None or manifest["layout"] != layout:
+        blocked_plan = (
+            graph.edges.join(deg, "src")
+            .select(block.cast("int").alias("block"), "src", "dst", "weight",
+                    "src_degree", "src_wdeg")
+            .repartition(n_blocks, "block")
         )
-
-    if partition_by.startswith("dst"):
-        raise ValueError(
-            f"partition_by={partition_by!r} requires a disk store "
-            "(scratch_dir): the broadcast-value superstep reads "
-            "worker-resident CSR blocks"
-        )
-    blocked = blocked_plan.persist()
-    blocked.count()  # materialize cache
-    return BlockedEdges(blocked, hubs, n_blocks, None, n_hubs_eff)
+        manifest = _write_coded_blocks(blocked_plan, path, layout)
+    return BlockedEdges(spark, path, n_blocks, partition_by,
+                        manifest["build_id"], hubs, n_hubs)
 
 
-def _store_version(path: str) -> int:
-    """Manifest version of an on-disk block store; 0 if absent.
-    Pre-v3 stores (unsorted edges, per-edge degree factors) are
-    rebuilt rather than reused."""
-    import json
-
-    mpath = os.path.join(path, "_MANIFEST.json")
-    if not os.path.exists(mpath):
-        return 0
-    with open(mpath) as f:
-        raw = json.load(f)
-    return raw.get("version", 1) if isinstance(raw, dict) else 1
-
-
-def _store_partition_by(path: str) -> str:
-    """Bucketing key of an on-disk block store ('src' for legacy v3)."""
-    import json
-
-    mpath = os.path.join(path, "_MANIFEST.json")
-    if not os.path.exists(mpath):
-        return ""
-    with open(mpath) as f:
-        raw = json.load(f)
-    return raw.get("partition_by", "src") if isinstance(raw, dict) else "src"
+def _read_manifest(path: str) -> dict | None:
+    """The manifest of the current-version store at ``path``, or None
+    when there is none (absent, or an older layout — rebuilt, not read)."""
+    try:
+        with open(os.path.join(path, _MANIFEST)) as f:
+            raw = json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+    if isinstance(raw, dict) and raw.get("version") == STORE_VERSION and "build_id" in raw:
+        return raw
+    return None
 
 
-def _write_coded_blocks(
-    blocked_df: DataFrame, path: str, partition_by: str = "src"
-) -> None:
+def _write_coded_blocks(blocked_df: DataFrame, path: str, layout: dict) -> dict:
     """Materialize each block with PRE-COMPUTED dense codes, so a cold
     cache load is a pure columnar read (no per-worker np.unique sort —
     the counting-sort CSR build, O2, runs exactly once per block here).
+    Returns the new manifest.
 
-    Layout (v3): ``{path}/block_N/{src_code,dst_code,dst_indptr,w,
-    src_inv_deg,src_inv_wdeg,src_ids,dst_ids}.npy``, edges sorted by
-    (dst, src). Stored as raw .npy so the read side can
+    Layout (v3): ``{path}/block_N/{src_code,dst_indptr,w,src_inv_deg,
+    src_inv_wdeg,src_ids,dst_ids}.npy`` (see ``_BLOCK_FILES``), edges
+    sorted by (dst, src). Stored as raw .npy so the read side can
     ``np.load(mmap_mode='r')``: the arrays live in the OS page cache,
     SHARED across every Python worker on the machine — a cache miss in
     one worker process costs an mmap open, not a rebuild, and the data
     is faulted in from disk once per machine, not once per process.
     (On a cluster: node-local scratch per executor, or a shared FS.)
 
-    Written from inside the blocking task; the returned summary row
-    materializes the job.
+    Written from inside the blocking task; the returned summary rows
+    materialize the job.
     """
 
     def write_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -254,144 +241,156 @@ def _write_coded_blocks(
         w = pdf["weight"].to_numpy().astype(np.float64)
         deg = pdf["src_degree"].to_numpy().astype(np.float64)
         wdeg = pdf["src_wdeg"].to_numpy().astype(np.float64)
-        # v3 layout: edges sorted by (dst, src) so the per-block
-        # scatter-add is a SEQUENTIAL segment sum (np.add.reduceat over
-        # dst_indptr) instead of a random scatter into a |dst_u|-sized
-        # accumulator — the dominant memory-bandwidth term of the SpMV
-        # at scale. The counting sort runs once here (O2), never in the
-        # hot loop.
+        # edges sorted by (dst, src) so the per-block scatter-add is a
+        # SEQUENTIAL segment sum (np.add.reduceat over dst_indptr)
+        # instead of a random scatter into a |dst_u|-sized accumulator —
+        # the dominant memory-bandwidth term of the SpMV at scale. The
+        # counting sort runs once here (O2), never in the hot loop.
         order = np.lexsort((src, dst))
         src, dst, w, deg, wdeg = (
             src[order], dst[order], w[order], deg[order], wdeg[order]
         )
         src_u, src_inv = np.unique(src, return_inverse=True)
         dst_u, dst_idx = np.unique(dst, return_index=True)
-        indptr = np.append(dst_idx, len(dst)).astype(np.int64)
         # per-UNIQUE-src degree factors: 1/deg and 1/Σw fold into the
-        # O(|src_u|) value lookup table instead of O(E) per-edge arrays
-        # (v2 stored inv_deg/w_norm per edge — 16B/edge of pure read
-        # traffic the kernel no longer pays)
+        # O(|src_u|) value lookup instead of O(E) per-edge arrays
         first_src = np.zeros(len(src_u), dtype=np.int64)
         first_src[src_inv] = np.arange(len(src))  # any occurrence works
+        arrays = {
+            "src_u": src_u.astype(np.int64),
+            "src_inv": src_inv.astype(np.int32),
+            "dst_u": dst_u.astype(np.int64),
+            "dst_indptr": np.append(dst_idx, len(dst)).astype(np.int64),
+            "w": w,
+            "src_inv_deg": 1.0 / deg[first_src],
+            "src_inv_wdeg": 1.0 / wdeg[first_src],
+        }
+        # unlink the previous build's files first: workers still holding
+        # them mmap'd keep reading the old inodes, never a truncated file
         bdir = os.path.join(path, f"block_{block}")
-        os.makedirs(bdir, exist_ok=True)
-        np.save(os.path.join(bdir, "src_code.npy"), src_inv.astype(np.int32))
-        np.save(os.path.join(bdir, "dst_code.npy"),
-                np.repeat(np.arange(len(dst_u), dtype=np.int32),
-                          np.diff(indptr)))
-        np.save(os.path.join(bdir, "dst_indptr.npy"), indptr)
-        np.save(os.path.join(bdir, "w.npy"), w)
-        np.save(os.path.join(bdir, "src_inv_deg.npy"), 1.0 / deg[first_src])
-        np.save(os.path.join(bdir, "src_inv_wdeg.npy"), 1.0 / wdeg[first_src])
-        np.save(os.path.join(bdir, "src_ids.npy"), src_u.astype(np.int64))
-        np.save(os.path.join(bdir, "dst_ids.npy"), dst_u.astype(np.int64))
-        return pd.DataFrame({"block": [block], "n_edges": [len(pdf)]})
+        shutil.rmtree(bdir, ignore_errors=True)
+        os.makedirs(bdir)
+        for name, arr in arrays.items():
+            np.save(os.path.join(bdir, f"{_BLOCK_FILES[name]}.npy"), arr)
+        return pd.DataFrame({"block": [block], "n_dst": [len(dst_u)]})
 
-    import json
-
+    os.makedirs(path, exist_ok=True)
+    # retire the previous build before touching its blocks: from here on
+    # a handle to it is refused on a cold cache instead of mixing builds
+    if os.path.exists(os.path.join(path, _MANIFEST)):
+        os.remove(os.path.join(path, _MANIFEST))
     written = (
         blocked_df.groupBy("block")
-        .applyInPandas(write_block, "block int, n_edges long")
+        .applyInPandas(write_block, "block int, n_dst long")
         .collect()
     )
-    # manifest distinguishes "block has no edges" from "store is gone":
-    # without it, losing the scratch dir would silently produce empty
-    # supersteps instead of an error. v3 = dst-sorted edges +
-    # per-unique-src degree factors (see write_block).
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
-        json.dump(
-            {
-                "version": 3,
-                "partition_by": partition_by,
-                "blocks": sorted(int(r["block"]) for r in written),
-            },
-            f,
-        )
+    # the manifest distinguishes "block has no edges" from "store is
+    # gone": without it, losing the scratch dir would silently produce
+    # empty supersteps instead of an error
+    manifest = {
+        "version": STORE_VERSION,
+        "build_id": uuid.uuid4().hex,
+        "layout": layout,
+        "blocks": sorted(int(r["block"]) for r in written),
+        # Σ per-block distinct dsts: the vertex count of a dst store
+        "n_dst": sum(int(r["n_dst"]) for r in written),
+    }
+    tmp = os.path.join(path, f".{_MANIFEST}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(path, _MANIFEST))
+    return manifest
 
 
 # ---------------------------------------------------------------------------
 # Worker-resident CSR block cache (the "device memory" of this engine).
-# Keyed by (path, block); bounded LRU since Spark does not pin blocks to
-# workers across stages.
+# Keyed by (path, build_id, ...); bounded LRU since Spark does not pin
+# blocks to workers across stages.
 
-_CSR_CACHE: "collections.OrderedDict[tuple, dict]" = collections.OrderedDict()
+_CSR_CACHE: "collections.OrderedDict[tuple, object]" = collections.OrderedDict()
 _CSR_CACHE_MAX = 64
 
 
-def _load_csr_block(path: str, block: int) -> dict:
-    key = (path, block)
-    hit = _CSR_CACHE.get(key)
-    if hit is not None:
+def _cached(key: tuple, build):
+    if key in _CSR_CACHE:
         _CSR_CACHE.move_to_end(key)
-        return hit
-    mkey = (path, "_manifest")
-    manifest = _CSR_CACHE.get(mkey)
-    if manifest is None:
-        import json
-
-        mpath = os.path.join(path, "_MANIFEST.json")
-        if not os.path.exists(mpath):
-            raise FileNotFoundError(
-                f"blocked-edge store missing or incomplete at {path} "
-                "(_MANIFEST.json not found) — rebuild with block_edges()"
-            )
-        with open(mpath) as f:
-            raw = json.load(f)
-        # v1 manifests were a bare block list (no w_norm arrays)
-        if isinstance(raw, dict):
-            manifest = {"blocks": set(raw["blocks"]),
-                        "version": raw.get("version", 1)}
-        else:
-            manifest = {"blocks": set(raw), "version": 1}
-        _CSR_CACHE[mkey] = manifest
-    bdir = os.path.join(path, f"block_{block}")
-    if block not in manifest["blocks"]:
-        blk = {"empty": True}
-    elif not os.path.isdir(bdir):
-        raise FileNotFoundError(
-            f"block {block} listed in manifest but missing at {bdir} — "
-            "blocked-edge store lost; rebuild with block_edges()"
-        )
-    elif manifest["version"] >= 3:
-        ld = lambda name: np.load(os.path.join(bdir, name), mmap_mode="r")
-        src_inv = ld("src_code.npy")
-        blk = {
-            "empty": len(src_inv) == 0,
-            "sorted": True,               # edges sorted by (dst, src)
-            "src_u": ld("src_ids.npy"),   # sorted unique srcs
-            "src_inv": src_inv,
-            "dst_u": ld("dst_ids.npy"),   # row i ↔ dst code i
-            "dst_inv": ld("dst_code.npy"),
-            "dst_indptr": ld("dst_indptr.npy"),
-            "w": ld("w.npy"),
-            # per-unique-src factors (fold into the value lookup, O(|src_u|))
-            "src_inv_deg": ld("src_inv_deg.npy"),
-            "src_inv_wdeg": ld("src_inv_wdeg.npy"),
-        }
-    else:
-        ld = lambda name: np.load(os.path.join(bdir, name), mmap_mode="r")
-        src_inv = ld("src_code.npy")
-        wn_path = os.path.join(bdir, "w_norm.npy")
-        blk = {
-            "empty": len(src_inv) == 0,
-            "sorted": False,
-            "src_u": ld("src_ids.npy"),   # sorted unique srcs
-            "src_inv": src_inv,
-            "dst_u": ld("dst_ids.npy"),   # row i ↔ dst code i
-            "dst_inv": ld("dst_code.npy"),
-            "w": ld("w.npy"),
-            "inv_deg": ld("inv_deg.npy"),
-            # absent in v1 stores; weighted supersteps check and error
-            "w_norm": ld("w_norm.npy") if os.path.exists(wn_path) else None,
-        }
-    _CSR_CACHE[key] = blk
+        return _CSR_CACHE[key]
+    value = _CSR_CACHE[key] = build()
     if len(_CSR_CACHE) > _CSR_CACHE_MAX:
         _CSR_CACHE.popitem(last=False)
-    return blk
+    return value
+
+
+def _load_csr_block(path: str, build_id: str, block: int) -> dict | None:
+    """Block ``block`` of build ``build_id`` of the store at ``path`` as
+    mmap'd arrays (``_BLOCK_FILES``); None when the block has no edges."""
+
+    def load():
+        # the manifest is re-read on every cache miss, so a handle to a
+        # replaced build can never load the new build's blocks
+        manifest = _read_manifest(path)
+        if manifest is None:
+            raise FileNotFoundError(
+                f"blocked-edge store missing or incomplete at {path} "
+                f"({_MANIFEST} not found) — rebuild with block_edges()"
+            )
+        if manifest["build_id"] != build_id:
+            raise RuntimeError(
+                f"blocked-edge store at {path} was rebuilt since this "
+                "handle was made — use the BlockedEdges returned by the "
+                "latest block_edges() call"
+            )
+        if block not in manifest["blocks"]:
+            return None
+        bdir = os.path.join(path, f"block_{block}")
+        if not os.path.isdir(bdir):
+            raise FileNotFoundError(
+                f"block {block} listed in manifest but missing at {bdir} — "
+                "blocked-edge store lost; rebuild with block_edges()"
+            )
+        return {
+            name: np.load(os.path.join(bdir, f"{fname}.npy"), mmap_mode="r")
+            for name, fname in _BLOCK_FILES.items()
+        }
+
+    return _cached((path, build_id, block), load)
+
+
+def _positions(sorted_ids: np.ndarray, keys: np.ndarray):
+    """(pos, found): where each key sits in ``sorted_ids`` and whether
+    it is actually there (``pos`` is clipped to a valid index)."""
+    pos = np.searchsorted(sorted_ids, keys)
+    safe = np.minimum(pos, len(sorted_ids) - 1)
+    return safe, (pos < len(sorted_ids)) & (sorted_ids[safe] == keys)
+
+
+def _block_spmv(blk: dict, vals: np.ndarray, pos: np.ndarray, found: np.ndarray,
+                weighted: bool, divide_by_src_degree: bool,
+                divide_by_src_wdegree: bool) -> np.ndarray:
+    """The per-block SpMV kernel every superstep runs.
+
+    ``vals[pos[i]]`` is the value of the block's i-th unique source
+    (0 where not ``found``). Returns the block's sums aligned to
+    ``blk["dst_u"]``: Σ over in-edges of val(src)·factor, where factor
+    is w (``weighted``), 1/deg(src) (``divide_by_src_degree``) or
+    w/Σw(src) (``divide_by_src_wdegree``, weighted PageRank).
+    """
+    lookup = np.where(found, vals[pos], 0.0)
+    # degree factors are per unique src: fold them into the O(|src_u|)
+    # lookup table, not per edge
+    if divide_by_src_wdegree:
+        lookup = lookup * blk["src_inv_wdeg"]
+    elif divide_by_src_degree:
+        lookup = lookup * blk["src_inv_deg"]
+    msg = lookup[blk["src_inv"]]
+    if weighted or divide_by_src_wdegree:
+        msg = msg * blk["w"]
+    # edges are sorted by dst: the scatter-add is a sequential segment sum
+    return np.add.reduceat(msg, np.asarray(blk["dst_indptr"][:-1]))
 
 
 def _route_values(blocked: BlockedEdges, values: DataFrame) -> DataFrame:
-    """Co-partition the value vector with the edge buckets.
+    """Co-partition the value vector with the src store's blocks.
 
     Normal vertices go to their single bucket; hub vertices are
     replicated to all buckets (their edges are salted everywhere).
@@ -438,61 +437,88 @@ def _route_values(blocked: BlockedEdges, values: DataFrame) -> DataFrame:
     return normal.unionByName(hub_vals)
 
 
-# -------------------------------------------------------- dense combine
-#
-# The sparse combine emits one (id, partial) row per distinct dst per
-# block. On a dense iteration (PageRank: every vertex has a value) each
-# block touches nearly ALL vertices, so the combine shuffles
-# O(n_blocks × V) rows — measured 79.5M rows/superstep on the 306M-edge
-# scaling graph, and it is the non-scaling term (Arrow row emission +
-# exchange + hash agg dominate over the numpy gather). The dense path
-# instead bincounts into the GLOBAL dense code space and emits fixed
-# ~2MB array chunks: n_blocks × V/DENSE_CHUNK rows (hundreds, not tens
-# of millions); the final combine is a per-chunk numpy vector add — the
-# DataFrame expression of an allreduce, the same shape as the
-# reference's cross-block atomicAdd into the global result vector
-# (kernels_free.cu:301-304).
-#
-# Guarded: the global id map is broadcast (V×8B), so the dense path is
-# only taken when V ≤ DENSE_COMBINE_MAX_VERTICES; above it (or for
-# cogroup-mode stores) spmv falls back to the sparse combine, which has
-# no V-sized structure anywhere.
-
-DENSE_COMBINE_MAX_VERTICES = 64_000_000
-DENSE_CHUNK = 1 << 18  # 262144 float64 = 2 MiB per emitted chunk row
-
-# value-vector broadcast guard for dst-partitioned stores: 64M ids
-# (~1 GB of (id,val) pairs) per executor — the same ceiling as the
-# dense-combine id map. Past it, use a src store + routed values.
-BROADCAST_VALUES_MAX_VERTICES = 64_000_000
+# ------------------------------------------------ broadcast (dst) store
 
 
-def _spmv_broadcast_values(
-    blocked: BlockedEdges,
-    values: DataFrame,
-    weighted: bool,
-    divide_by_src_degree: bool,
-    divide_by_src_wdegree: bool,
-) -> DataFrame:
-    """Superstep over a dst-partitioned store: broadcast the O(V) value
-    vector; each block computes final sums for its OWN disjoint dst set
-    (no routing shuffle in, no combine shuffle out — one map-only job).
-
-    Measured motivation (306M-edge scaling graph, 8 cores): the routed
-    src-store superstep spent ~5 of its 6.5 s wall moving the combine —
-    every src block touches nearly every dst, so both sparse
-    (n_blocks × V rows) and dense (n_blocks × V × 8B chunks) combines
-    shuffle ~0.7 GB/superstep. Disjoint dst blocks delete that term
-    entirely; the remaining per-superstep fixed cost is one 8B·V
-    broadcast + task scheduling.
-    """
+def _map_blocks(blocked: BlockedEdges, vec: np.ndarray | None, fn, schema: str):
+    """One map-only job over the store's blocks: ``fn(block, blk, vec)``
+    returns a pandas frame per non-empty block, with the dense driver
+    vector ``vec`` broadcast once. Returns (DataFrame, broadcast)."""
     spark = blocked.spark
-    path = blocked.path
-    # static structures, broadcast ONCE per store: the sorted global
-    # vertex-id map (same structure the dense combine uses) and, cached
-    # per worker, each block's src positions in it. Per ITERATION only
-    # the 8B·V aligned value array crosses the wire — half the bytes of
-    # re-broadcasting (id, val) pairs, and no per-task searchsorted.
+    path, build_id, nb = blocked.path, blocked.build_id, blocked.n_blocks
+    vec_bc = None if vec is None else spark.sparkContext.broadcast(
+        np.ascontiguousarray(vec, dtype=np.float64)
+    )
+    # one partition per block: one task per block, no shuffle
+    blocks_df = spark.range(0, nb, 1, nb).select(
+        F.col("id").cast("int").alias("block")
+    )
+
+    def run(batches):
+        v = None if vec_bc is None else vec_bc.value
+        for p in batches:
+            for b in p["block"]:
+                blk = _load_csr_block(path, build_id, int(b))
+                if blk is not None:
+                    yield fn(int(b), blk, v)
+
+    return blocks_df.mapInPandas(run, schema), vec_bc
+
+
+def _dense_map(blocked: BlockedEdges):
+    """(ids, broadcast) of a dst store's sorted global id map, built once
+    per store per session; None on a src store or over the broadcast
+    guard. Blocks own disjoint dst sets and graphs are symmetrized, so
+    the blocks' dst ids together are exactly the vertex ids."""
+    if blocked.dense is None:
+        manifest = _read_manifest(blocked.path)
+        if manifest is None:
+            raise FileNotFoundError(
+                f"blocked-edge store missing at {blocked.path} — rebuild "
+                "with block_edges()"
+            )
+        blocked.dense = False
+        if (blocked.partition_by == "dst"
+                and manifest["n_dst"] <= BROADCAST_VALUES_MAX_VERTICES):
+            rows = _map_blocks(
+                blocked, None,
+                lambda b, blk, v: pd.DataFrame(
+                    {"ids": [np.asarray(blk["dst_u"]).tobytes()]}
+                ),
+                "ids binary",
+            )[0].collect()
+            ids = np.sort(np.concatenate(
+                [np.frombuffer(r["ids"], dtype=np.int64) for r in rows]
+                + [np.zeros(0, dtype=np.int64)]
+            ))
+            blocked.dense = (ids, blocked.spark.sparkContext.broadcast(ids))
+    return blocked.dense or None
+
+
+def _dense_ready(mode: str, blocked: BlockedEdges | None) -> bool:
+    """True when an iterative operator should run its driver-resident
+    dense loop (``spmv_dense``): csr mode on a dst store within the
+    broadcast guard. The one dispatch PageRank, eigenvector and Katz
+    share."""
+    return mode == "csr" and blocked is not None and _dense_map(blocked) is not None
+
+
+def _block_codes(path: str, build_id: str, block: int, blk: dict, ids_bc):
+    """(src pos, src found, dst pos) of the block's unique ids in the
+    global id map — cached per worker process, so the searchsorted runs
+    once per block, not once per superstep."""
+
+    def build():
+        ids = ids_bc.value
+        pos, found = _positions(ids, np.asarray(blk["src_u"]))
+        return pos, found, np.searchsorted(ids, np.asarray(blk["dst_u"]))
+
+    return _cached((path, build_id, block, "codes"), build)
+
+
+def _require_dense(blocked: BlockedEdges):
+    if blocked.partition_by != "dst":
+        raise ValueError("the dense superstep requires a dst-partitioned store")
     dense = _dense_map(blocked)
     if dense is None:
         raise ValueError(
@@ -500,48 +526,33 @@ def _spmv_broadcast_values(
             f"({BROADCAST_VALUES_MAX_VERTICES}); rebuild the block store "
             "with partition_by='src' for the routed superstep"
         )
-    ids, ids_bc = dense
-    pdf = values.select("id", "val").toPandas()
-    vid = pdf["id"].to_numpy(dtype="int64")
-    vval = pdf["val"].to_numpy(dtype="float64")
-    pos = np.searchsorted(ids, vid)
-    safe = np.minimum(pos, len(ids) - 1)
-    ok = (pos < len(ids)) & (ids[safe] == vid)
-    dense_vals = np.zeros(len(ids))
-    dense_vals[safe[ok]] = vval[ok]
-    vec_bc = spark.sparkContext.broadcast(dense_vals)
-    nb = blocked.n_blocks
-    blocks_df = (
-        spark.range(nb)
-        .select(F.col("id").cast("int").alias("block"))
-        .repartition(nb, "block")
-    )
+    return dense
 
-    def kern(batches):
-        vec = vec_bc.value
-        for p in batches:
-            for b in p["block"]:
-                blk = _load_csr_block(path, int(b))
-                if blk.get("empty"):
-                    continue
-                g, g_ok = _block_src_gcodes(path, int(b), ids_bc)
-                lookup = np.where(g_ok, vec[g], 0.0)
-                if divide_by_src_wdegree:
-                    lookup = lookup * blk["src_inv_wdeg"]
-                elif divide_by_src_degree:
-                    lookup = lookup * blk["src_inv_deg"]
-                msg = lookup[blk["src_inv"]]
-                if weighted or divide_by_src_wdegree:
-                    msg = msg * blk["w"]
-                partial = np.add.reduceat(msg, np.asarray(blk["dst_indptr"][:-1]))
-                # no zero-filter: blocks are dst-disjoint, so this IS
-                # the final result — emitting every dst row lets dense
-                # clients (pagerank) skip their vertex left-join
-                yield pd.DataFrame(
-                    {"id": np.asarray(blk["dst_u"]), "msg": partial}
-                )
 
-    return blocks_df.mapInPandas(kern, "id long, msg double")
+def dense_vector_from_df(blocked: BlockedEdges, values: DataFrame,
+                         col: str = "val", default: float = 0.0) -> np.ndarray:
+    """Align a (id, <col>) DataFrame to the store's sorted global id map."""
+    ids, _ = _require_dense(blocked)
+    pdf = values.select("id", col).toPandas()
+    pos, found = _positions(ids, pdf["id"].to_numpy(dtype="int64"))
+    out = np.full(len(ids), default, dtype=np.float64)
+    out[pos[found]] = pdf[col].to_numpy(dtype="float64")[found]
+    return out
+
+
+def dense_vector_to_df(blocked: BlockedEdges, vec: np.ndarray,
+                       col: str = "rank") -> DataFrame:
+    """Materialize a dense driver vector back to a (id, <col>) DataFrame,
+    distributed via the store's blocks (each block emits its own dst
+    rows) so no single createDataFrame batch holds all V rows."""
+    path, build_id = blocked.path, blocked.build_id
+    _, ids_bc = _require_dense(blocked)
+
+    def emit(b, blk, v):
+        dpos = _block_codes(path, build_id, b, blk, ids_bc)[2]
+        return pd.DataFrame({"id": np.asarray(blk["dst_u"]), col: v[dpos]})
+
+    return _map_blocks(blocked, vec, emit, f"id long, {col} double")[0]
 
 
 def spmv_dense(
@@ -566,61 +577,24 @@ def spmv_dense(
     (BROADCAST_VALUES_MAX_VERTICES). The reference keeps exactly this
     split: CSR resident on the device, the value/result vectors crossing
     host↔device once per phase (``kernels_free.cu:43-85``).
-
-    Compared to the DataFrame superstep (``_spmv_broadcast_values``)
-    this deletes the per-iteration localCheckpoint job, the Arrow
-    DF→pandas round-trip, and the result-DF scan — the fixed costs that
-    dominate once the kernel is fast.
     """
-    spark = blocked.spark
-    path = blocked.path
-    dense = _dense_map(blocked)
-    if dense is None:
-        raise ValueError(
-            "spmv_dense requires a dst-partitioned disk store within the "
-            f"broadcast guard ({BROADCAST_VALUES_MAX_VERTICES} vertices)"
-        )
-    if not blocked.partition_by.startswith("dst"):
-        raise ValueError("spmv_dense requires a dst-partitioned store")
-    ids, ids_bc = dense
+    ids, ids_bc = _require_dense(blocked)
     if len(vec) != len(ids):
         raise ValueError(f"vec length {len(vec)} != id map length {len(ids)}")
-    vec_bc = spark.sparkContext.broadcast(np.ascontiguousarray(vec, dtype=np.float64))
-    nb = blocked.n_blocks
-    blocks_df = (
-        spark.range(nb)
-        .select(F.col("id").cast("int").alias("block"))
-        .repartition(nb, "block")
-    )
+    path, build_id = blocked.path, blocked.build_id
+    flags = (weighted, divide_by_src_degree, divide_by_src_wdegree)
 
-    def kern(batches):
-        v = vec_bc.value
-        for p in batches:
-            for b in p["block"]:
-                blk = _load_csr_block(path, int(b))
-                if blk.get("empty"):
-                    continue
-                g, g_ok = _block_src_gcodes(path, int(b), ids_bc)
-                lookup = np.where(g_ok, v[g], 0.0)
-                if divide_by_src_wdegree:
-                    lookup = lookup * blk["src_inv_wdeg"]
-                elif divide_by_src_degree:
-                    lookup = lookup * blk["src_inv_deg"]
-                msg = lookup[blk["src_inv"]]
-                if weighted or divide_by_src_wdegree:
-                    msg = msg * blk["w"]
-                partial = np.add.reduceat(msg, np.asarray(blk["dst_indptr"][:-1]))
-                gd = _block_gcodes(path, int(b), ids_bc)
-                yield pd.DataFrame(
-                    {
-                        "pos": [np.asarray(gd, dtype=np.int32).tobytes()],
-                        "vals": [np.asarray(partial, dtype=np.float64).tobytes()],
-                    }
-                )
+    def kern(b, blk, v):
+        pos, found, dpos = _block_codes(path, build_id, b, blk, ids_bc)
+        partial = _block_spmv(blk, v, pos, found, *flags)
+        return pd.DataFrame({
+            "pos": [dpos.astype(np.int32).tobytes()],
+            "vals": [partial.astype(np.float64).tobytes()],
+        })
 
-    rows = blocks_df.mapInPandas(kern, "pos binary, vals binary").collect()
+    df, vec_bc = _map_blocks(blocked, vec, kern, "pos binary, vals binary")
     out = np.zeros(len(ids))
-    for r in rows:
+    for r in df.collect():
         # blocks own disjoint dst sets → plain assignment is the combine
         out[np.frombuffer(r["pos"], dtype=np.int32)] = np.frombuffer(
             r["vals"], dtype=np.float64
@@ -629,356 +603,62 @@ def spmv_dense(
     return out
 
 
-def dense_vector_from_df(blocked: BlockedEdges, values: DataFrame,
-                         col: str = "val", default: float = 0.0) -> np.ndarray:
-    """Align a (id, <col>) DataFrame to the store's sorted global id map."""
-    dense = _dense_map(blocked)
-    if dense is None:
-        raise ValueError("store has no dense id map (over guard or no path)")
-    ids, _ = dense
-    pdf = values.select("id", col).toPandas()
-    vid = pdf["id"].to_numpy(dtype="int64")
-    vval = pdf[col].to_numpy(dtype="float64")
-    pos = np.searchsorted(ids, vid)
-    safe = np.minimum(pos, len(ids) - 1)
-    ok = (pos < len(ids)) & (ids[safe] == vid)
-    out = np.full(len(ids), default, dtype=np.float64)
-    out[safe[ok]] = vval[ok]
-    return out
-
-
-def dense_vector_to_df(blocked: BlockedEdges, vec: np.ndarray,
-                       col: str = "rank") -> DataFrame:
-    """Materialize a dense driver vector back to a (id, <col>) DataFrame,
-    distributed via the store's blocks (each block emits its own dst
-    rows) so no single createDataFrame batch holds all V rows."""
-    spark = blocked.spark
-    path = blocked.path
-    ids, ids_bc = _dense_map(blocked)
-    vec_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(vec, dtype=np.float64)
-    )
-    nb = blocked.n_blocks
-    blocks_df = (
-        spark.range(nb)
-        .select(F.col("id").cast("int").alias("block"))
-        .repartition(nb, "block")
-    )
-
-    def emit(batches):
-        v = vec_bc.value
-        for p in batches:
-            for b in p["block"]:
-                blk = _load_csr_block(path, int(b))
-                if blk.get("empty"):
-                    continue
-                gd = _block_gcodes(path, int(b), ids_bc)
-                yield pd.DataFrame(
-                    {"id": np.asarray(blk["dst_u"]), col: v[gd]}
-                )
-
-    return blocks_df.mapInPandas(emit, f"id long, {col} double")
-
-
-def _dense_map(blocked: BlockedEdges):
-    """Build (once per store per session) the sorted global dst-id array
-    + its broadcast. Returns None when over the size guard."""
-    if blocked.dense is not None:
-        return None if blocked.dense is False else blocked.dense
-    if blocked.path is None:
-        blocked.dense = False
-        return None
-    spark = blocked.spark
-    path = blocked.path
-    blocks_df = spark.range(blocked.n_blocks).select(
-        F.col("id").cast("int").alias("block")
-    )
-
-    def block_dsts(batches):
-        for pdf in batches:
-            for b in pdf["block"]:
-                blk = _load_csr_block(path, int(b))
-                if not blk.get("empty"):
-                    yield pd.DataFrame({"id": np.asarray(blk["dst_u"])})
-
-    ids_df = blocks_df.mapInPandas(block_dsts, "id long").distinct()
-    n = ids_df.count()
-    if n > DENSE_COMBINE_MAX_VERTICES:
-        blocked.dense = False
-        return None
-    ids = np.sort(ids_df.toPandas()["id"].to_numpy())
-    bc = spark.sparkContext.broadcast(ids)
-    blocked.dense = (ids, bc)
-    return blocked.dense
-
-
-def _block_gcodes(path: str, block: int, ids_bc) -> np.ndarray:
-    """Global dense code of each of the block's dst rows (cached — the
-    searchsorted against the broadcast id map runs once per block per
-    worker process, not per superstep)."""
-    key = (path, block, "gcode", id(ids_bc))
-    hit = _CSR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    blk = _load_csr_block(path, block)
-    g = np.searchsorted(ids_bc.value, np.asarray(blk["dst_u"]))
-    _CSR_CACHE[key] = g
-    return g
-
-
-def _block_src_gcodes(path: str, block: int, ids_bc):
-    """(positions, valid_mask) of the block's unique srcs in the global
-    id map — cached per worker process (broadcast-value superstep)."""
-    key = (path, block, "src_gcode", id(ids_bc))
-    hit = _CSR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    blk = _load_csr_block(path, block)
-    ids = ids_bc.value
-    src_u = np.asarray(blk["src_u"])
-    pos = np.searchsorted(ids, src_u)
-    safe = np.minimum(pos, len(ids) - 1)
-    ok = (pos < len(ids)) & (ids[safe] == src_u)
-    out = (safe, ok)
-    _CSR_CACHE[key] = out
-    return out
-
-
-def _spmv_kernel(key, edge_pdf: pd.DataFrame, val_pdf: pd.DataFrame,
-                 weighted: bool = True,
-                 divide_by_src_degree: bool = False,
-                 divide_by_src_wdegree: bool = False) -> pd.DataFrame:
-    """Per-block CSR gather-scatter in numpy (runs inside Arrow batches).
-
-    gather: msg[e] = val[src[e]] * weight[e]   (weight ≡ 1 if unweighted)
-    partial scatter-add by dst (map-side combine): np.bincount.
-    ``divide_by_src_wdegree``: factor = w(u,v)/Σ_v' w(u,v') (weighted
-    PageRank message normalization).
-    """
-    import numpy as np
-
-    if len(edge_pdf) == 0 or len(val_pdf) == 0:
-        return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                             "partial": pd.Series([], dtype="float64")})
-    src = edge_pdf["src"].to_numpy()
-    dst = edge_pdf["dst"].to_numpy()
-    if divide_by_src_wdegree:
-        w = edge_pdf["weight"].to_numpy() / edge_pdf["src_wdeg"].to_numpy()
-    else:
-        w = edge_pdf["weight"].to_numpy() if weighted else 1.0
-        if divide_by_src_degree:
-            w = w / edge_pdf["src_degree"].to_numpy()
-    vid = val_pdf["id"].to_numpy()
-    vval = val_pdf["val"].to_numpy(dtype="float64")
-
-    # CSR-style gather: position of each edge's src in the value vector.
-    order = np.argsort(vid, kind="stable")
-    vid_sorted, vval_sorted = vid[order], vval[order]
-    pos = np.searchsorted(vid_sorted, src)
-    # guard: srcs without a value row contribute 0 (e.g. inactive frontier)
-    valid = (pos < len(vid_sorted)) & (vid_sorted[np.minimum(pos, len(vid_sorted) - 1)] == src)
-    msg = np.where(valid, vval_sorted[np.minimum(pos, len(vid_sorted) - 1)], 0.0) * w
-
-    # partial aggregate by dst — the map-side combine
-    dst_u, inv = np.unique(dst, return_inverse=True)
-    partial = np.bincount(inv, weights=msg, minlength=len(dst_u))
-    out = pd.DataFrame({"id": dst_u, "partial": partial})
-    return out[out["partial"] != 0.0]
-
-
 def spmv(
     blocked: BlockedEdges,
     values: DataFrame,
     weighted: bool = True,
     divide_by_src_degree: bool = False,
     divide_by_src_wdegree: bool = False,
-    combine: str = "auto",
 ) -> DataFrame:
-    """y = Aᵀ·x over the blocked edge table.
+    """y = Aᵀ·x over the block store.
 
     ``values``: DF (id:long, val:double). Returns (id:long, msg:double)
     where msg(v) = Σ_{(u,v)∈E} val(u)·weight(u,v) (weight ≡ 1 when
-    ``weighted=False``, e.g. PageRank). Vertices receiving nothing are
-    absent (caller joins/coalesces as needed).
+    ``weighted=False``, e.g. PageRank). Only the value vector moves;
+    the edges stay in the worker-resident blocks.
 
-    Physical strategy: if the blocked edges were materialized to disk
-    (``block_edges(..., scratch_dir=...)``), each superstep ships ONLY
-    the routed value vector to Python; the edge block's CSR structures
-    come from the worker-resident cache. Otherwise falls back to
-    cogrouping edges+values (edges cross the Arrow boundary each call).
-
-    ``combine``: how per-block partial sums meet — ``"sparse"`` emits
-    (id, partial) rows + a hash agg (O(n_blocks × distinct-dst) rows);
-    ``"dense"`` emits fixed ~2MB array chunks of the global dense
-    vector + a per-chunk numpy add (O(n_blocks × V/DENSE_CHUNK) rows —
-    hundreds instead of tens of millions). Both are exact (equality
-    tested to 1e-12). ``"auto"`` resolves to dense when available (disk
-    store + V ≤ DENSE_COMBINE_MAX_VERTICES), else sparse: on the v3
-    dst-sorted store the dense chunk emission is a sequential slice of
-    the already-segment-summed partials, and interleaved A/B medians on
-    the 306M-edge scaling graph now show dense ahead at 8 cores (8.2 s
-    vs 10.4 s) and even at 2 (19.8 vs 18.8) — and its ~10⁵× combine-row
-    reduction is the plan that survives a real network between
-    executors.
+    On a ``dst`` store the values are aligned to the global id map on
+    the driver and broadcast; each block emits the final sums of its
+    own disjoint dst set — one map-only job, every vertex with an
+    in-edge present (dense clients skip their vertex join). On a ``src``
+    store the values are routed to their blocks (hubs replicated), and
+    the per-block partials meet in a hash aggregate; vertices receiving
+    nothing are absent (caller joins/coalesces as needed).
     """
-    if blocked.partition_by.startswith("dst"):
-        # disjoint-dst store: broadcast-value map-only superstep
-        return _spmv_broadcast_values(
-            blocked, values, weighted, divide_by_src_degree,
-            divide_by_src_wdegree,
-        )
-    routed = _route_values(blocked, values)
-    if blocked.path is not None:
-        path = blocked.path
-        dense = (
-            _dense_map(blocked) if combine in ("dense", "auto") else None
-        )
-        if combine == "dense" and dense is None:
-            raise ValueError(
-                "dense combine unavailable: store has no path or vertex "
-                f"count exceeds {DENSE_COMBINE_MAX_VERTICES}"
-            )
+    flags = (weighted, divide_by_src_degree, divide_by_src_wdegree)
+    path, build_id = blocked.path, blocked.build_id
+    if blocked.partition_by == "dst":
+        _, ids_bc = _require_dense(blocked)
+        vec = dense_vector_from_df(blocked, values)
 
-        def block_msg(key, val_pdf):
-            """Shared gather: per-edge messages for one block, or None."""
-            blk = _load_csr_block(path, int(key[0]))
-            if blk.get("empty") or len(val_pdf) == 0:
-                return None, None
-            vid = val_pdf["id"].to_numpy()
-            vval = val_pdf["val"].to_numpy(dtype="float64")
-            # scatter incoming values onto this block's src slots
-            src_u = blk["src_u"]
-            lookup = np.zeros(len(src_u))
-            pos = np.searchsorted(src_u, vid)
-            ok = (pos < len(src_u)) & (src_u[np.minimum(pos, len(src_u) - 1)] == vid)
-            lookup[pos[ok]] = vval[ok]
-            if blk["sorted"]:
-                # v3: degree factors are per-unique-src — fold them into
-                # the O(|src_u|) lookup table, not per-edge (O(E))
-                if divide_by_src_wdegree:
-                    lookup = lookup * blk["src_inv_wdeg"]
-                elif divide_by_src_degree:
-                    lookup = lookup * blk["src_inv_deg"]
-                msg = lookup[blk["src_inv"]]
-                if weighted or divide_by_src_wdegree:
-                    msg = msg * blk["w"]
-                return blk, msg
-            msg = lookup[blk["src_inv"]]
-            if divide_by_src_wdegree:
-                if blk["w_norm"] is None:
-                    raise FileNotFoundError(
-                        f"block store at {path} predates w_norm (v1); "
-                        "rebuild with block_edges() for weighted supersteps"
-                    )
-                msg = msg * blk["w_norm"]
-            else:
-                if weighted:
-                    msg = msg * blk["w"]
-                if divide_by_src_degree:
-                    msg = msg * blk["inv_deg"]
-            return blk, msg
+        def broadcast_kernel(b, blk, v):
+            pos, found, _ = _block_codes(path, build_id, b, blk, ids_bc)
+            return pd.DataFrame({"id": np.asarray(blk["dst_u"]),
+                                 "msg": _block_spmv(blk, v, pos, found, *flags)})
 
-        def block_partial(blk, msg):
-            """Per-block combine: sequential segment sum on v3 stores
-            (edges pre-sorted by dst → np.add.reduceat walks msg once,
-            in order — no random scatter); bincount fallback on v2."""
-            if blk["sorted"]:
-                return np.add.reduceat(msg, np.asarray(blk["dst_indptr"][:-1]))
-            return np.bincount(
-                blk["dst_inv"], weights=msg, minlength=len(blk["dst_u"])
-            )
+        return _map_blocks(blocked, vec, broadcast_kernel, "id long, msg double")[0]
 
-        if dense is not None:
-            ids, ids_bc = dense
-            n_global = len(ids)
-            # captured by value so the workers use the driver's setting
-            # (tests shrink it to force the multi-chunk path)
-            chunk_w = DENSE_CHUNK
+    def routed_kernel(key, val_pdf):
+        blk = _load_csr_block(path, build_id, int(key[0]))
+        if blk is None or len(val_pdf) == 0:
+            return pd.DataFrame({"id": pd.Series([], dtype="int64"),
+                                 "partial": pd.Series([], dtype="float64")})
+        vid = val_pdf["id"].to_numpy()
+        order = np.argsort(vid)
+        pos, found = _positions(vid[order], np.asarray(blk["src_u"]))
+        vals = val_pdf["val"].to_numpy(dtype="float64")[order]
+        partial = _block_spmv(blk, vals, pos, found, *flags)
+        nz = partial != 0.0
+        return pd.DataFrame({"id": np.asarray(blk["dst_u"])[nz],
+                             "partial": partial[nz]})
 
-            def cached_kernel_dense(key, val_pdf):
-                blk, msg = block_msg(key, val_pdf)
-                if blk is None:
-                    return pd.DataFrame(
-                        {"chunk": pd.Series([], dtype="int32"),
-                         "vals": pd.Series([], dtype="object")}
-                    )
-                partial = block_partial(blk, msg)
-                g = _block_gcodes(path, int(key[0]), ids_bc)  # ascending
-                chunks, arrs = [], []
-                edges_idx = np.searchsorted(
-                    g, np.arange(0, n_global + chunk_w, chunk_w)
-                )
-                for c in range(len(edges_idx) - 1):
-                    lo, hi = edges_idx[c], edges_idx[c + 1]
-                    if lo == hi:
-                        continue
-                    seg = partial[lo:hi]
-                    if not seg.any():
-                        continue
-                    width = min(chunk_w, n_global - c * chunk_w)
-                    arr = np.zeros(width)
-                    arr[g[lo:hi] - c * chunk_w] = seg
-                    chunks.append(c)
-                    arrs.append(arr)
-                # dtype="object" even when empty: an empty float64
-                # column can't Arrow-convert to array<double> (hit when
-                # a sparse value vector zeroes out a whole block, e.g.
-                # personalized PageRank's first supersteps)
-                return pd.DataFrame({"chunk": pd.Series(chunks, dtype="int32"),
-                                     "vals": pd.Series(arrs, dtype="object")})
-
-            chunked = routed.groupBy("block").applyInPandas(
-                cached_kernel_dense, "chunk int, vals array<double>"
-            )
-
-            def combine_chunk(key, pdf):
-                c = int(key[0])
-                acc = None
-                for arr in pdf["vals"]:
-                    a = np.asarray(arr)
-                    acc = a.copy() if acc is None else acc + a
-                ids_slice = ids_bc.value[c * chunk_w : c * chunk_w + len(acc)]
-                nz = acc != 0.0
-                return pd.DataFrame({"id": ids_slice[nz], "msg": acc[nz]})
-
-            return chunked.groupBy("chunk").applyInPandas(
-                combine_chunk, "id long, msg double"
-            )
-
-        def cached_kernel(key, val_pdf):
-            blk, msg = block_msg(key, val_pdf)
-            if blk is None:
-                return pd.DataFrame(
-                    {"id": pd.Series([], dtype="int64"),
-                     "partial": pd.Series([], dtype="float64")}
-                )
-            partial = block_partial(blk, msg)
-            nz = partial != 0.0
-            return pd.DataFrame({"id": np.asarray(blk["dst_u"])[nz],
-                                 "partial": partial[nz]})
-
-        partials = routed.groupBy("block").applyInPandas(
-            cached_kernel, "id long, partial double"
-        )
-    else:
-        if combine == "dense":
-            raise ValueError("dense combine requires a disk block store")
-        if blocked.edges is None:
-            raise ValueError("BlockedEdges has neither a disk store nor a cached DF")
-
-        def kernel(key, edge_pdf, val_pdf):
-            return _spmv_kernel(
-                key, edge_pdf, val_pdf,
-                weighted=weighted, divide_by_src_degree=divide_by_src_degree,
-                divide_by_src_wdegree=divide_by_src_wdegree,
-            )
-
-        partials = (
-            blocked.edges.groupBy("block")
-            .cogroup(routed.groupBy("block"))
-            .applyInPandas(kernel, "id long, partial double")
-        )
-    return partials.groupBy("id").agg(F.sum("partial").alias("msg"))
+    return (
+        _route_values(blocked, values)
+        .groupBy("block")
+        .applyInPandas(routed_kernel, "id long, partial double")
+        .groupBy("id")
+        .agg(F.sum("partial").alias("msg"))
+    )
 
 
 def spmv_sql(
@@ -1004,20 +684,4 @@ def spmv_sql(
         .select("dst", (F.col("val") * w).alias("m"))
         .groupBy(F.col("dst").alias("id"))
         .agg(F.sum("m").alias("msg"))
-    )
-
-
-def default_block_store(graph: Graph, prefix: str = "cgs_blk_") -> BlockedEdges:
-    """Build the store an iterative dense-superstep operator should use:
-    dst-partitioned (broadcast-value, combine-free supersteps) when the
-    vertex count fits the broadcast guard, else the routed src store."""
-    import tempfile
-
-    pb = (
-        "dst"
-        if graph.num_vertices() <= BROADCAST_VALUES_MAX_VERTICES
-        else "src"
-    )
-    return block_edges(
-        graph, scratch_dir=tempfile.mkdtemp(prefix=prefix), partition_by=pb
     )

@@ -4,8 +4,8 @@ Local-mode defaults are tuned for the sandbox (single JVM, 32 threads,
 128 GiB); on a real cluster the same builder is used with ``master`` and
 memory knobs supplied by spark-submit. AQE is always on — it supplies
 runtime skew-join splitting and partition coalescing, which together
-with explicit hub salting (operators/superstep.py block_edges) is our
-answer to power-law hub-vertex skew.
+with hub salting in the src-bucketed block store (operators/superstep.py
+block_edges) is our answer to power-law hub-vertex skew.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def get_spark(
                 k
                 for k, v in extra_conf.items()
                 if not active.conf.isModifiable(k)
-                and active.conf.get(k, None) != v
+                and active.conf.get(k, None) != str(v)
             )
             if stale:
                 raise RuntimeError(

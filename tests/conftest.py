@@ -8,14 +8,33 @@ ordered pairs ("To Match with baders results",
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 import networkx as nx
 import pytest
 
 from centrality_gpu_spark.session import get_spark
+from centrality_gpu_spark.sources.reference_samples import SAMPLE_EDGES
 
-SAMPLE_DIR = "/root/reference/Codes/sample_input"
+
+def _write_sample_dir() -> str:
+    """Write the four reference sample graphs in their original text
+    format (header ``n m``, then ``u v 1`` rows) to a temp dir that
+    lives as long as the test session."""
+    d = tempfile.mkdtemp(prefix="cgs_samples_")
+    atexit.register(shutil.rmtree, d, True)
+    for which, edges in SAMPLE_EDGES.items():
+        n = len({u for e in edges for u in e})
+        rows = [f"{n} {len(edges)}"] + [f"{u} {v} 1" for u, v in edges]
+        with open(os.path.join(d, f"test{which}.txt"), "w") as f:
+            f.write("\n".join(rows) + "\n")
+    return d
+
+
+SAMPLE_DIR = _write_sample_dir()
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = f"{TESTDATA}/sf0.001"
 SF_MED = f"{TESTDATA}/sf0.01"
@@ -36,7 +55,13 @@ def sample_nx(name: str) -> nx.Graph:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    # at most 8 cores, and no more than the box has (SPARK_GRAFT_CPUS):
+    # oversubscribed local slots only add Python-worker contention
+    cores = min(8, int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    # get_spark's driver heap defaults to 48g; on a smaller box G1 grows
+    # the heap until the kernel's OOM killer takes the JVM mid-suite
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+    s = get_spark(app_name="tests", cores=cores, shuffle_partitions=cores)
     yield s
     s.stop()
 

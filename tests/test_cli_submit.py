@@ -22,9 +22,11 @@ import pyspark
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SAMPLE_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-SAMPLE = "/root/reference/Codes/sample_input/test4.txt"
+SAMPLE = f"{SAMPLE_DIR}/test4.txt"
 
 LAUNCHER = """\
 from centrality_gpu_spark.cli import main

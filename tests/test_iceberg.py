@@ -87,6 +87,16 @@ def test_get_spark_rejects_static_conf_on_active_session(spark):
     )
 
 
+def test_get_spark_accepts_equal_non_string_static_conf(spark):
+    """A non-string extra_conf value equal to the live static one (conf
+    values are strings) is not stale and must not trip the guard."""
+    from centrality_gpu_spark.session import get_spark
+
+    assert not spark.conf.isModifiable("spark.driver.port")
+    port = int(spark.conf.get("spark.driver.port"))
+    assert get_spark(extra_conf={"spark.driver.port": port}) is spark
+
+
 def test_jar_pick_is_numeric_version_order(monkeypatch, tmp_path):
     monkeypatch.delenv(ICEBERG_JAR_ENV, raising=False)
     jars = tmp_path / "jars"

@@ -74,7 +74,7 @@ def test_pagerank_csr_with_forced_salting(spark):
     """hub_threshold=2 forces nearly every vertex down the salted path —
     result must be identical to the unsalted SQL mode."""
     g = read_edge_list_local(spark, f"{SAMPLE_DIR}/test4.txt")
-    blocked = block_edges(g, hub_threshold=2)
+    blocked = block_edges(g, hub_threshold=2, partition_by="src")
     assert blocked.hubs.count() > 0
     a = {r.id: r["rank"] for r in
          pagerank(g, mode="csr", fixed_iterations=4, blocked=blocked).collect()}
@@ -84,7 +84,7 @@ def test_pagerank_csr_with_forced_salting(spark):
 
 
 def test_pagerank_weighted_modes_agree_events(spark):
-    """Weighted CSR path (pre-folded w_norm in the block store) must
+    """Weighted CSR path (pre-folded src_inv_wdeg in the block store) must
     match the weighted SQL mode bit-for-bit-ish."""
     g = events_graph(spark, SF_SMALL).persist()
     a = {r.id: r["rank"] for r in
@@ -102,11 +102,11 @@ def test_pagerank_weighted_modes_agree_events(spark):
     g.unpersist()
 
 
-def test_pagerank_weighted_csr_cogroup_mode(spark):
-    """The non-disk cogroup fallback must agree too (exercises the
-    src_wdeg column path in _spmv_kernel)."""
+def test_pagerank_weighted_csr_src_store(spark):
+    """The routed src-store superstep (DataFrame loop, no dense loop)
+    must agree too on the weighted recurrence (src_inv_wdeg factors)."""
     g = read_edge_list_local(spark, f"{SAMPLE_DIR}/test3.txt")
-    blocked = block_edges(g)  # no scratch_dir -> cogroup path
+    blocked = block_edges(g, partition_by="src")
     a = {r.id: r["rank"] for r in
          pagerank(g, mode="csr", fixed_iterations=4, weighted=True,
                   blocked=blocked).collect()}
@@ -188,7 +188,7 @@ def test_pagerank_dense_loop_convergence_matches_sql(spark):
     g = events_graph(spark, SF_SMALL)
     blocked = block_edges(
         g, scratch_dir=tempfile.mkdtemp(prefix="t_prdense_"),
-        partition_by="dst_range",
+        partition_by="dst",
     )
     a = {r.id: r["rank"] for r in pagerank(g, mode="sql", tol=1e-9).collect()}
     b = {r.id: r["rank"]

@@ -1,8 +1,7 @@
-"""SpMV primitive: disk-cached CSR mode vs cogroup mode vs SQL mode."""
+"""SpMV primitive: the block store's src and dst supersteps vs SQL mode."""
 
 import tempfile
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,29 +28,41 @@ def as_map(df):
     return {r.id: r.msg for r in df.collect()}
 
 
-@pytest.mark.parametrize("weighted", [True, False])
-def test_spmv_modes_agree(spark, g, values, weighted):
-    expected = as_map(spmv_sql(g, values, weighted=weighted))
-    cogrouped = block_edges(g)
-    got_cg = as_map(spmv(cogrouped, values, weighted=weighted))
-    cached = block_edges(g, scratch_dir=tempfile.mkdtemp(prefix="t_blk_"))
-    got_ck = as_map(spmv(cached, values, weighted=weighted))
-    assert set(expected) == set(got_cg) == set(got_ck)
+# the four weighting-flag combinations the operators use
+FLAG_COMBOS = [
+    dict(weighted=False),
+    dict(weighted=True),
+    dict(weighted=False, divide_by_src_degree=True),
+    dict(weighted=True, divide_by_src_wdegree=True),
+]
+
+
+@pytest.mark.parametrize("kw", FLAG_COMBOS)
+def test_spmv_modes_agree(spark, g, values, kw):
+    """Routed superstep on an unsalted src store vs the SQL reference."""
+    expected = as_map(spmv_sql(g, values, **kw))
+    cached = block_edges(
+        g, scratch_dir=tempfile.mkdtemp(prefix="t_blk_"), partition_by="src"
+    )
+    assert cached.n_hubs == 0
+    got = as_map(spmv(cached, values, **kw))
+    assert set(expected) == set(got)
     for k in expected:
-        assert got_cg[k] == pytest.approx(expected[k], abs=1e-12)
-        assert got_ck[k] == pytest.approx(expected[k], abs=1e-12)
-    cogrouped.unpersist()
+        assert got[k] == pytest.approx(expected[k], abs=1e-12)
     cached.unpersist()
 
 
-def test_spmv_cached_with_salting(spark, g, values):
-    """Forced salting (hub_threshold=2) through the disk-cached path."""
-    expected = as_map(spmv_sql(g, values, weighted=False))
+@pytest.mark.parametrize("kw", FLAG_COMBOS)
+def test_spmv_cached_with_salting(spark, g, values, kw):
+    """Forced salting (hub_threshold=2) through the routed src store."""
+    expected = as_map(spmv_sql(g, values, **kw))
     blocked = block_edges(
-        g, hub_threshold=2, scratch_dir=tempfile.mkdtemp(prefix="t_blk_")
+        g, hub_threshold=2, scratch_dir=tempfile.mkdtemp(prefix="t_blk_"),
+        partition_by="src",
     )
     assert blocked.hubs.count() > 0
-    got = as_map(spmv(blocked, values, weighted=False))
+    got = as_map(spmv(blocked, values, **kw))
+    assert set(expected) == set(got)
     for k in expected:
         assert got[k] == pytest.approx(expected[k], abs=1e-12)
     blocked.unpersist()
@@ -67,44 +78,7 @@ def test_spmv_repeated_calls_consistent(spark, g, values):
     blocked.unpersist()
 
 
-def test_spmv_dense_vs_sparse_combine(spark, g, values):
-    """The dense chunked combine must equal the sparse row combine to
-    1e-12 on every vertex, for all weighting modes, including a chunk
-    width smaller than the vertex count (multi-chunk path)."""
-    import centrality_gpu_spark.operators.superstep as ss
-
-    cached = block_edges(g, scratch_dir=tempfile.mkdtemp(prefix="t_blkd_"))
-    old_chunk = ss.DENSE_CHUNK
-    ss.DENSE_CHUNK = 8  # force many chunks on the small test graph
-    try:
-        for kw in (
-            {"weighted": True},
-            {"weighted": False, "divide_by_src_degree": True},
-            {"divide_by_src_wdegree": True},
-        ):
-            dense = as_map(spmv(cached, values, combine="dense", **kw))
-            sparse = as_map(spmv(cached, values, combine="sparse", **kw))
-            assert set(dense) == set(sparse)
-            for k in sparse:
-                assert dense[k] == pytest.approx(sparse[k], abs=1e-12)
-    finally:
-        ss.DENSE_CHUNK = old_chunk
-        cached.unpersist()
-
-
-def test_spmv_dense_requires_store(spark, g, values):
-    cogrouped = block_edges(g)
-    with pytest.raises(ValueError, match="dense combine"):
-        spmv(cogrouped, values, combine="dense").collect()
-    cogrouped.unpersist()
-
-
-@pytest.mark.parametrize("kw", [
-    dict(weighted=False),
-    dict(weighted=True),
-    dict(weighted=False, divide_by_src_degree=True),
-    dict(weighted=True, divide_by_src_wdegree=True),
-])
+@pytest.mark.parametrize("kw", FLAG_COMBOS)
 def test_spmv_dst_store_agrees(spark, g, values, kw):
     """dst-partitioned store (broadcast-value, combine-free superstep)
     must equal the SQL and src-store paths for every flag combination.
@@ -124,16 +98,11 @@ def test_spmv_dst_store_agrees(spark, g, values, kw):
     dst_st.unpersist()
 
 
-def test_dst_store_requires_disk(spark, g):
-    with pytest.raises(ValueError, match="scratch_dir"):
-        block_edges(g, partition_by="dst")
-
-
 def test_store_partition_mismatch_rebuilds(spark, g, values):
     """reuse_existing must not reuse a store built with the other
     bucketing key."""
     d = tempfile.mkdtemp(prefix="t_pbmix_")
-    src_st = block_edges(g, scratch_dir=d)
+    src_st = block_edges(g, scratch_dir=d, partition_by="src")
     expected = as_map(spmv_sql(g, values, weighted=False))
     dst_st = block_edges(g, scratch_dir=d, reuse_existing=True, partition_by="dst")
     got = as_map(spmv(dst_st, values, weighted=False))
@@ -142,17 +111,10 @@ def test_store_partition_mismatch_rebuilds(spark, g, values):
     src_st.unpersist(); dst_st.unpersist()
 
 
-@pytest.mark.parametrize("pb", ["dst", "dst_range"])
-@pytest.mark.parametrize("kw", [
-    dict(weighted=False),
-    dict(weighted=True),
-    dict(weighted=False, divide_by_src_degree=True),
-    dict(weighted=True, divide_by_src_wdegree=True),
-])
-def test_spmv_dense_driver_vector_agrees(spark, g, values, pb, kw):
+@pytest.mark.parametrize("kw", FLAG_COMBOS)
+def test_spmv_dense_driver_vector_agrees(spark, g, values, kw):
     """The driver-resident dense superstep (spmv_dense) must equal the
-    SQL path for every flag combination, on both dst bucketings (hash
-    and locality-preserving range)."""
+    SQL path for every flag combination."""
     from centrality_gpu_spark.operators.superstep import (
         _dense_map,
         dense_vector_from_df,
@@ -162,7 +124,7 @@ def test_spmv_dense_driver_vector_agrees(spark, g, values, pb, kw):
 
     expected = as_map(spmv_sql(g, values, **kw))
     st = block_edges(
-        g, scratch_dir=tempfile.mkdtemp(prefix=f"t_{pb}_"), partition_by=pb
+        g, scratch_dir=tempfile.mkdtemp(prefix="t_dense_"), partition_by="dst"
     )
     vec = dense_vector_from_df(st, values)
     out = spmv_dense(st, vec, **kw)
@@ -178,42 +140,91 @@ def test_spmv_dense_driver_vector_agrees(spark, g, values, pb, kw):
     st.unpersist()
 
 
-def test_dst_range_store_spmv_agrees(spark, g, values):
-    """DataFrame-superstep parity on the range-bucketed store, plus
-    contiguity: each block's dst ids must form a contiguous id range."""
-    import os
-
-    expected = as_map(spmv_sql(g, values, weighted=True))
-    st = block_edges(
-        g, scratch_dir=tempfile.mkdtemp(prefix="t_rng_"), partition_by="dst_range"
-    )
-    got = as_map(spmv(st, values, weighted=True))
-    for k in expected:
-        assert got[k] == pytest.approx(expected[k], abs=1e-12)
-    # contiguous, non-overlapping dst ranges across blocks
-    from centrality_gpu_spark.operators.superstep import _load_csr_block
-
-    spans = []
-    for b in range(st.n_blocks):
-        blk = _load_csr_block(st.path, b)
-        if blk.get("empty"):
-            continue
-        d = np.asarray(blk["dst_u"])
-        spans.append((d.min(), d.max()))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2
-    st.unpersist()
-
-
 def test_spmv_dense_requires_dst_store(spark, g, values):
     from centrality_gpu_spark.operators.superstep import (
         dense_vector_from_df,
         spmv_dense,
     )
 
-    src_st = block_edges(g, scratch_dir=tempfile.mkdtemp(prefix="t_srcst_"))
-    vec = dense_vector_from_df(src_st, values)
+    src_st = block_edges(
+        g, scratch_dir=tempfile.mkdtemp(prefix="t_srcst_"), partition_by="src"
+    )
     with pytest.raises(ValueError, match="dst-partitioned"):
-        spmv_dense(src_st, vec)
+        spmv_dense(src_st, dense_vector_from_df(src_st, values))
     src_st.unpersist()
+
+
+def test_block_edges_default_bucketing(spark, g, monkeypatch):
+    """partition_by=None picks the dst store while the vertex count fits
+    the broadcast guard, else the routed src store."""
+    import centrality_gpu_spark.operators.superstep as ss
+
+    assert block_edges(g).partition_by == "dst"
+    monkeypatch.setattr(ss, "BROADCAST_VALUES_MAX_VERTICES", g.num_vertices() - 1)
+    st = block_edges(g)
+    assert st.partition_by == "src"
+    st.unpersist()
+
+
+@pytest.mark.parametrize("pb", ["src", "dst"])
+def test_rebuilt_store_serves_new_blocks(spark, pb):
+    """Rebuilding a store at the same scratch_dir in one session (sample
+    graphs 4 → 1 → 4) must never serve the previous build's blocks from
+    the workers' CSR caches."""
+    from centrality_gpu_spark.operators.superstep import (
+        dense_vector_from_df,
+        spmv_dense,
+    )
+
+    d = tempfile.mkdtemp(prefix=f"t_rebuild_{pb}_")
+    for name in ("test4", "test1", "test4"):
+        gr = read_edge_list_local(spark, f"{SAMPLE_DIR}/{name}.txt")
+        vals = gr.vertices().select("id", (F.col("id") * 0.5 + 1.0).alias("val"))
+        blocked = block_edges(gr, scratch_dir=d, partition_by=pb)
+        for kw in (dict(weighted=True), dict(weighted=False, divide_by_src_degree=True)):
+            expected = as_map(spmv_sql(gr, vals, **kw))
+            got = as_map(spmv(blocked, vals, **kw))
+            assert set(got) == set(expected), name
+            for k in expected:
+                assert got[k] == pytest.approx(expected[k], abs=1e-12), (name, k)
+            if pb == "dst":
+                vec = dense_vector_from_df(blocked, vals)
+                ids = sorted(expected)
+                out = spmv_dense(blocked, vec, **kw)
+                assert out.tolist() == pytest.approx(
+                    [expected[k] for k in ids], abs=1e-12
+                ), name
+        blocked.unpersist()
+
+
+def test_reuse_existing_keeps_matching_build(spark, g, values):
+    """reuse_existing keeps the build (and its id) only when bucketing,
+    block count and hub threshold all match; anything else rebuilds."""
+    d = tempfile.mkdtemp(prefix="t_reuse_")
+    a = block_edges(g, scratch_dir=d, partition_by="src")
+    b = block_edges(g, scratch_dir=d, partition_by="src", reuse_existing=True)
+    assert b.build_id == a.build_id
+    c = block_edges(g, scratch_dir=d, partition_by="src", reuse_existing=True,
+                    n_blocks=3)
+    assert c.build_id != a.build_id
+    expected = as_map(spmv_sql(g, values, weighted=True))
+    got = as_map(spmv(c, values, weighted=True))
+    for k in expected:
+        assert got[k] == pytest.approx(expected[k], abs=1e-12)
+    for st in (a, b, c):
+        st.unpersist()
+
+
+def test_stale_handle_is_refused(spark, g):
+    """A handle to a build that was since replaced at the same path is
+    refused on a cold cache instead of reading the new build's files."""
+    import centrality_gpu_spark.operators.superstep as ss
+
+    d = tempfile.mkdtemp(prefix="t_stale_")
+    old = block_edges(g, scratch_dir=d, partition_by="dst")
+    new = block_edges(g, scratch_dir=d, partition_by="dst")
+    assert new.build_id != old.build_id
+    block = ss._read_manifest(new.path)["blocks"][0]
+    assert ss._load_csr_block(new.path, new.build_id, block) is not None
+    with pytest.raises(RuntimeError, match="rebuilt"):
+        ss._load_csr_block(old.path, old.build_id, block)

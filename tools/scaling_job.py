@@ -6,7 +6,8 @@ Invoked by tools/bench_scaling.py at two core counts on the SAME input
 
 Jobs (subset-selectable via $SCALE_JOBS, comma list; default all):
 - pagerank: 10 fixed CSR supersteps on the scale graph (shuffle-
-  bound; the headline metric) + one-time block build
+  bound; the headline metric) + one-time block build, on a store
+  bucketed by $SCALE_PARTITION_BY ("dst", the default, or "src")
 - betweenness: broadcast-CSR Brandes over $SCALE_SOURCES sources
   (compute-bound, embarrassingly source-parallel — the reference's
   own regime)
